@@ -118,14 +118,18 @@ def table_rowcount(spark: SparkSession, sf_dir: str, name: str) -> int:
 
 def parquet_path_rowcount(path: str):
     """Total row count of a LOCAL parquet file/directory from footer
-    metadata alone — no Spark job (r14, guide §1/§5: an unfiltered
-    count() on fresh parquet is already metadata-only work, but it
-    still schedules one job per call; freshly-staged scratch tables
-    are read right back by the stager, which can take the number from
-    the footers it just wrote). Returns None when the path cannot be
-    footer-probed (remote URI, unreadable footer) — callers fall back
-    to a Spark count(). Matches Spark's count() exactly: parquet row
-    counts are footer facts, not estimates."""
+    metadata alone — no Spark job (freshly-staged scratch tables are
+    read right back by the stager, which can take the number from the
+    footers it just wrote). Matches Spark's count() exactly: parquet
+    row counts are footer facts, not estimates.
+
+    Returns None — callers fall back to a Spark count() — whenever the
+    footers cannot answer for the whole path: a remote URI, a
+    non-empty part whose footer is unreadable, or a directory holding
+    any non-hidden subdirectory (a partitioned or nested layout Spark
+    would read but this flat listing would miss). Only a zero-byte
+    part (an interrupted write Spark tolerates) counts as 0 rows."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     if "://" in path and not path.startswith("file://"):
@@ -135,16 +139,16 @@ def parquet_path_rowcount(path: str):
             return pq.ParquetFile(path).metadata.num_rows
         total = 0
         for f in os.listdir(path):
-            if not f.endswith(".parquet"):
+            full = os.path.join(path, f)
+            if f.startswith((".", "_")):
                 continue
-            try:
-                total += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            except Exception:
-                # zero-byte placeholder part (interrupted write):
-                # Spark tolerates it; its count contribution is 0
+            if os.path.isdir(full):
+                return None
+            if not f.endswith(".parquet") or os.path.getsize(full) == 0:
                 continue
+            total += pq.ParquetFile(full).metadata.num_rows
         return total
-    except Exception:
+    except (OSError, pa.ArrowException):
         return None
 
 

@@ -17,15 +17,20 @@ surface is only the per-element operation:
 - the winnowing chain's token hash is the per-char poly fold
   ``pmod(h * 31 + ascii(c), 1e9+7)`` over ``split(tok, '')`` — and
   Spark's ``split('')`` + ``ascii()`` iterate full Unicode CODE
-  POINTS exactly like Python ``ord()`` (probed on ASCII / Latin-1 /
-  CJK / astral emoji / combining marks — plans/r14/ascii_parity.txt;
-  pinned by tests/test_int_kernels.py), so the whole chain moves to
+  POINTS exactly like Python ``ord()`` (ASCII / Latin-1 / CJK /
+  astral emoji / combining marks, pinned by
+  tests/test_int_kernels.py), so the whole chain moves to
   numpy: code points via UTF-32 decode, then the same mod-1e9+7
   folds. All intermediates stay far inside int64 (h*31 + cp <= ~3e10;
   g*1e6 + th <= ~1e15), and Spark runs ANSI mode — it would THROW on
   int64 overflow rather than wrap — so numpy's wrapping semantics are
   never exercised; numpy's ``%`` returns the divisor's sign like
   Spark's ``pmod``.
+
+Every kernel raises ``ValueError`` on an empty per-doc segment:
+``np.add.reduceat`` / ``np.minimum.reduceat`` would silently return
+the NEXT doc's value there, so an unfiltered caller gets a task
+failure instead of wrong rows.
 """
 
 from __future__ import annotations
@@ -42,6 +47,20 @@ def _segment_starts(counts):
     return starts
 
 
+def _require_nonempty(kernel: str, what: str, ids, counts) -> None:
+    """Raise (not assert: the check must survive ``python -O``) when
+    any doc's segment is empty."""
+    import numpy as np
+
+    empty = np.flatnonzero(counts == 0)
+    if len(empty):
+        raise ValueError(
+            f"{kernel}: {len(empty)} doc(s) with an empty {what} "
+            f"(first doc_id {int(ids[empty[0]])}); callers must "
+            f"pre-filter them"
+        )
+
+
 def simhash_from_token_hashes(batches):
     """mapInPandas kernel: (doc_id, th: array<bigint>) -> (doc_id,
     simhash: bigint), bit-identical to dedup.SIMHASH_EXPR's fold.
@@ -52,9 +71,9 @@ def simhash_from_token_hashes(batches):
     The finish lambda sums shiftleft(1, j) for c_j > 0 as BIGINT
     (wrapping negative at j = 63); building the bits in uint64 and
     reinterpreting as int64 produces the same two's-complement value.
-    Callers must pre-filter token-less docs (the fold's zero-token
-    case never reaches the kernel — b28 filters size(tokens) > 0
-    before the signature, exactly as the SQL form did).
+    Callers must pre-filter token-less docs (b28 filters
+    size(tokens) > 0 before the signature, exactly as the SQL form
+    did); an empty array raises ValueError.
     """
     import numpy as np
     import pandas as pd
@@ -67,6 +86,7 @@ def simhash_from_token_hashes(batches):
         lens = np.fromiter(
             (len(t) for t in th_cells), dtype=np.int64, count=len(th_cells)
         )
+        _require_nonempty("simhash_from_token_hashes", "token-hash array", ids, lens)
         flat = (
             np.concatenate([np.asarray(t, dtype=np.int64) for t in th_cells])
             if len(th_cells)
@@ -95,7 +115,7 @@ def minhash_sig_kernel(k: int, prime: int):
     Replacing the explode + 32-expression hash-aggregate removes the
     doc_id Exchange under the banding entirely. Callers must
     pre-filter docs with empty shingle arrays (token-bearing docs
-    always have >= 1 shingle)."""
+    always have >= 1 shingle); an empty array raises ValueError."""
 
     def kernel(batches):
         import numpy as np
@@ -109,6 +129,7 @@ def minhash_sig_kernel(k: int, prime: int):
             lens = np.fromiter(
                 (len(c) for c in cells), dtype=np.int64, count=len(cells)
             )
+            _require_nonempty("minhash_sig_kernel", "shingle array", ids, lens)
             flat = (
                 np.concatenate([np.asarray(c, dtype=np.int64) for c in cells])
                 % prime
@@ -144,7 +165,8 @@ def winnow_prints_kernel(b2: int, n: int = 4, w: int = 4):
     output SET equals the SQL form's per doc (order differs — every
     consumer aggregates, and the set is the contract). Callers must
     pre-filter token-less docs (every token has >= 1 char after
-    TOKENS_EXPR's empty-token filter).
+    TOKENS_EXPR's empty-token filter); a token-less doc raises
+    ValueError.
     """
 
     def kernel(batches):
@@ -160,6 +182,7 @@ def winnow_prints_kernel(b2: int, n: int = 4, w: int = 4):
             m = np.fromiter(
                 (len(t) for t in tok_cells), dtype=np.int64, count=len(tok_cells)
             )
+            _require_nonempty("winnow_prints_kernel", "token array", ids, m)
             # ---- per-token char poly fold (vectorized over tokens,
             # looping char position over a shrinking active set) ----
             all_toks: list = []

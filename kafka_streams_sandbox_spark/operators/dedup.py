@@ -330,8 +330,7 @@ def _minhash_band_keys(docs: DataFrame) -> DataFrame:
     # signature-identical (pinned by tests/test_int_kernels.py), and
     # the posting explode + doc_id Exchange + 32-expression
     # hash-aggregate disappear from the plan outright: the signature
-    # is now map-only from the scan into the band-key explode
-    # (plans/r14/b27_sig_{before,after}.txt).
+    # is now map-only from the scan into the band-key explode.
     from kafka_streams_sandbox_spark.functions.intkernels import (
         minhash_sig_kernel,
     )

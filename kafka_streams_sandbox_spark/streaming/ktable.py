@@ -6,7 +6,7 @@ Reference dataflow (KStreamsToKTable.java buildTopology(), :66-107):
       ├── .to(streams-output)             A6  -> raw passthrough sink
       └── .toTable(materialized)          A2  -> latest_by_key_stream (update-mode agg)
             ├── .mapValues(peek)          A3  -> peek() console tap
-            ├── interactive queries       A9  -> memory-sink view + watch()
+            ├── interactive queries       A9  -> memory-sink view + StreamsApp.watch()
             └── .filter(k ==ic v)         A4  -> ktable_filter (tombstone-emitting)
                   ├── .toStream().to(...) A7/A8 -> changelog sinks
                   └── materialized store      -> ParquetKTableStore (foreachBatch upsert/delete)
@@ -23,23 +23,22 @@ Semantics carried over exactly:
   piece (SURVEY.md §4.2), implemented as foreachBatch merge into a
   parquet store (Delta MERGE WHEN MATCHED DELETE in production).
 - Interactive queries (A9, :152-167, :205-210): complete-mode memory
-  sink registers a queryable view; watch() full-scans it on a cadence
-  like the reference's 10 s watcher thread.
+  sink registers a queryable view; StreamsApp.watch() full-scans a
+  store on a cadence like the reference's 10 s watcher thread.
 
 Scale notes: state is hash-partitioned by key across executors
 (shuffle on groupBy key) — the 3-partition topic of the reference
-generalizes to spark.sql.shuffle.partitions. The parquet store is
-hash-bucketed + versioned: a micro-batch rewrites only the buckets
-holding changed keys, and readers follow an atomically-flipped
-_CURRENT pointer (see ParquetKTableStore).
+generalizes to spark.sql.shuffle.partitions. The parquet store keeps
+one flat version directory per merge: each micro-batch rewrites the
+whole store, readers follow an atomically-flipped _CURRENT pointer,
+and the previous version stays readable for one more merge (see
+ParquetKTableStore).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
 import uuid
 from collections.abc import Callable
 
@@ -185,41 +184,29 @@ class ParquetKTableStore:
     ``MERGE WHEN MATCHED AND src.is_delete THEN DELETE`` pattern on
     plain parquet.
 
-    Layout — hash-bucketed and versioned, the two properties a store
-    needs at scale:
+    Layout — one flat version directory per merge:
 
         <root>/_CURRENT                 -> names the live version
-        <root>/v<batch>-<nonce>/__bucket=<b>/part-*.parquet
+        <root>/v<batch>-<nonce>/part-*.parquet
 
-    * Incremental: a micro-batch only REWRITES the buckets containing
-      changed keys (changed buckets are re-merged and re-written;
-      unchanged buckets are carried into the new version as hardlinks
-      — zero data copy). Per-batch cost is bounded by touched buckets,
-      not store size; ``n_buckets`` scales with key cardinality (8
-      here, thousands on a real cluster).
+    * Whole-store rewrite: each merge unions the micro-batch with the
+      live version, keeps the latest row per key (batch rows outrank
+      stored rows), drops tombstones and writes the result as a new
+      version. Per-batch cost grows with store size; a high-cardinality
+      changelog touches every key range each batch anyway.
     * Atomic + reader-safe: readers resolve ``_CURRENT`` (flipped via
       os.replace, atomic on POSIX) — there is no instant where the
       store path doesn't exist. The previous version's files are kept
       until the NEXT merge completes, so a DataFrame handed out just
       before a flip stays readable through one full merge cycle.
+    * Empty store: an all-tombstone merge writes a schema-only part
+      file, so the version still reads back as an empty frame.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key: str = "user_id",
-        n_buckets: int = 8,
-    ):
+    def __init__(self, spark: SparkSession, path: str, key: str = "user_id"):
         self.spark = spark
         self.path = path
         self.key = key
-        self.n_buckets = n_buckets
-        # upsert-order base: resolved from the persisted store on the
-        # first merge, so a new app run (whose Spark micro-batch ids
-        # restart at 0) stamps its rows ABOVE everything already
-        # persisted — see merge_batch
-        self._base: int | None = None
 
     # -- version pointer ---------------------------------------------------
     def _current_file(self) -> str:
@@ -238,149 +225,39 @@ class ParquetKTableStore:
             f.write(version)
         os.replace(tmp, self._current_file())  # atomic pointer flip
 
-    def _bucket_col(self) -> F.Column:
-        return F.pmod(
-            F.xxhash64(F.col(self.key).cast("string")), F.lit(self.n_buckets)
-        ).cast("int")
-
     # -- reads -------------------------------------------------------------
-    @staticmethod
-    def _has_parts(vdir: str) -> bool:
-        for _root, _dirs, files in os.walk(vdir):
-            if any(f.startswith("part-") for f in files):
-                return True
-        return False
-
-    def _read_version(self, vdir: str) -> DataFrame | None:
-        """DataFrame over one version dir. A version with zero part
-        files (a micro-batch tombstoned every remaining key) is a valid
-        EMPTY store, not an error: parquet schema inference would crash
-        on it, so merge_batch leaves a schema marker and this
-        reconstructs the empty frame from it."""
-        if self._has_parts(vdir):
-            return self.spark.read.parquet(vdir)
-        marker = os.path.join(vdir, "_EMPTY_SCHEMA.json")
-        if os.path.exists(marker):
-            from pyspark.sql.types import StructType
-
-            with open(marker) as f:
-                schema = StructType.fromJson(json.loads(f.read()))
-            return self.spark.createDataFrame([], schema)
-        return None
-
     def read(self) -> DataFrame | None:
         version = self.current_version()
         if version is None:
             return None
-        df = self._read_version(os.path.join(self.path, version))
-        return None if df is None else df.drop("__bucket")
-
-    def _persisted_next_base(self) -> int:
-        """First stamp value that outranks every persisted row.
-
-        Version dirs are named ``v{stamp}-{hex}`` where stamp is the
-        highest ``__batch`` written by that merge, so the pointer name
-        itself carries the watermark — no data scan needed."""
-        prev = self.current_version()
-        if prev is None:
-            return 0
-        try:
-            return int(prev.split("-", 1)[0][1:]) + 1
-        except ValueError:  # unexpected legacy name
-            return 0
+        return self.spark.read.parquet(os.path.join(self.path, version))
 
     # -- merge -------------------------------------------------------------
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        if self._base is None:
-            self._base = self._persisted_next_base()
-        # Stamp rows with base + batch_id, NOT raw batch_id: Spark
-        # micro-batch ids restart at 0 per streaming query (fresh
-        # checkpoint per StreamsApp.start), so raw ids would let rows
-        # persisted by a previous run outrank this run's upserts.
-        if "__batch" in batch.columns:
-            batch = batch.withColumn(
-                "__batch", F.col("__batch") + F.lit(self._base)
-            )
-        else:
-            batch = batch.withColumn("__batch", F.lit(self._base + batch_id))
-        batch = batch.withColumn("__bucket", self._bucket_col())
-        # foreachBatch re-executes the upstream plan per action; this
-        # merge needs three (stamp probe, changed-bucket collect,
-        # write), so cache the batch for its duration.
-        batch = batch.persist()
-        try:
-            self._merge_cached(batch)
-        finally:
-            batch.unpersist()
+        """Fold one micro-batch into a new version and flip to it.
 
-    def _merge_cached(self, batch: DataFrame) -> None:
+        The batch frame is read exactly once (by the write): a second
+        action would re-run the upstream stateful aggregation. Batch
+        rows always outrank stored rows, so a restarted app (whose
+        micro-batch ids restart at 0) needs no re-basing."""
         from kafka_streams_sandbox_spark.operators.semantic import latest_per_key
 
-        stamp = int(
-            batch.agg(F.max("__batch")).collect()[0][0] or self._base
-        )
-        # Changed-bucket set: at most n_buckets small ints — a bounded
-        # driver-side collect by construction.
-        changed = sorted(
-            r["__bucket"]
-            for r in batch.select("__bucket").distinct().collect()
-        )
-
         prev_version = self.current_version()
-        version = f"v{stamp}-{uuid.uuid4().hex[:8]}"
-        vdir = os.path.join(self.path, version)
-        os.makedirs(vdir, exist_ok=True)
-
-        combined = batch
+        combined = batch.withColumn("__src", F.lit(1))
         if prev_version is not None:
-            prev_dir = os.path.join(self.path, prev_version)
-            existing = self._read_version(prev_dir)
-            if existing is not None:
-                # partition pruning: only changed buckets are read back
-                touched = existing.filter(F.col("__bucket").isin(changed))
-                combined = touched.unionByName(batch)
-        merged = latest_per_key(
-            combined, key=self.key, ts="__batch", tiebreak="__batch"
-        )
+            stored = self.spark.read.parquet(os.path.join(self.path, prev_version))
+            combined = stored.withColumn("__src", F.lit(0)).unionByName(combined)
+        merged = latest_per_key(combined, key=self.key, ts="__src", tiebreak="__src")
         # NULL is_delete is an explicit tombstone (a NULL-predicate row
         # from ktable_filter means "failed the filter"), never a
         # silent keep — coalesce makes that visible in the plan.
         survivors = merged.filter(
             ~F.coalesce(F.col("is_delete"), F.lit(True))
-        )
-        survivors.write.mode("append").partitionBy("__bucket").parquet(vdir)
-
-        if prev_version is not None:
-            self._link_unchanged(prev_version, version, changed)
-        if not self._has_parts(vdir):
-            # every key tombstoned: the store is legitimately empty.
-            # Parquet can't represent "zero part files with a schema",
-            # so persist the schema beside the (empty) version.
-            with open(os.path.join(vdir, "_EMPTY_SCHEMA.json"), "w") as f:
-                f.write(survivors.schema.json())
+        ).drop("__src")
+        version = f"v{batch_id}-{uuid.uuid4().hex[:8]}"
+        survivors.write.parquet(os.path.join(self.path, version))
         self._flip_current(version)
         self._cleanup(keep={version, prev_version})
-
-    def _link_unchanged(
-        self, prev_version: str, version: str, changed: list[int]
-    ) -> None:
-        """Carry unchanged buckets into the new version as hardlinks —
-        no data copy, and the old version stays intact for readers."""
-        prev_dir = os.path.join(self.path, prev_version)
-        vdir = os.path.join(self.path, version)
-        changed_names = {f"__bucket={b}" for b in changed}
-        for name in os.listdir(prev_dir):
-            src = os.path.join(prev_dir, name)
-            if not name.startswith("__bucket=") or not os.path.isdir(src):
-                continue
-            if name in changed_names:
-                continue
-            dst = os.path.join(vdir, name)
-            os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(src):
-                if fname.startswith((".", "_")):
-                    continue
-                os.link(os.path.join(src, fname), os.path.join(dst, fname))
 
     def _cleanup(self, keep: set[str | None]) -> None:
         """Drop versions older than (current, previous) — previous is
@@ -391,37 +268,14 @@ class ParquetKTableStore:
             if name.startswith("v") and os.path.isdir(full) and name not in keep:
                 shutil.rmtree(full, ignore_errors=True)
 
-    def foreach_batch(self) -> Callable[[DataFrame, int], None]:
-        return self.merge_batch
-
-
-def watch(
-    spark: SparkSession,
-    view: str,
-    interval_s: float = 10.0,
-    iterations: int = 3,
-    sink: Callable[[list], None] | None = None,
-) -> list[list]:
-    """A9 — the reference's state watcher (KStreamsToKTable.java:152-167):
-    full-scan the materialized view every ``interval_s``; returns the
-    snapshots. The reference runs 10 s cadence for an hour; tests run
-    a few fast iterations."""
-    snapshots = []
-    for i in range(iterations):
-        rows = spark.sql(f"SELECT * FROM {view}").collect()
-        snapshots.append(rows)
-        (sink or (lambda r: print(f"[WATCH {view}] {len(r)} keys")))(rows)
-        if i + 1 < iterations:
-            time.sleep(interval_s)
-    return snapshots
-
 
 # ---------------------------------------------------------------------------
 # Runnable pipelines (registered rows-only: streaming ≠ SQL-expressible)
 # ---------------------------------------------------------------------------
-def _run_to_memory(df: DataFrame, mode: str) -> str:
-    """Run a streaming DF availableNow into a memory-sink view."""
-    name = f"ktable_{uuid.uuid4().hex[:8]}"
+def run_to_memory(df: DataFrame, mode: str) -> str:
+    """Run a streaming DF availableNow into a memory-sink view; returns
+    the view name."""
+    name = f"mem_{uuid.uuid4().hex[:8]}"
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -502,7 +356,7 @@ def a02_stream_table_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 stream->table: streaming latest-by-key, materialized as a
     queryable memory view (A9). Equals batch b17 (duality test)."""
     tbl = latest_by_key_stream(events_stream(spark, sf_dir))
-    view = _run_to_memory(tbl, "complete")
+    view = run_to_memory(tbl, "complete")
     return spark.table(view)
 
 
@@ -517,7 +371,7 @@ def a03_stream_peek(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = peek(tbl, sink=lines.append)
     q.awaitTermination()
     assert lines, "A3 peek observer captured no updates"
-    view = _run_to_memory(tbl, "complete")
+    view = run_to_memory(tbl, "complete")
     return spark.table(view)
 
 
@@ -535,7 +389,7 @@ def a04_stream_filtered_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor("value").cast("bigint") % 3).cast("string").alias("v"),
     )
     filtered = ktable_filter(keyed, key_eq_value_predicate())
-    view = _run_to_memory(filtered, "complete")
+    view = run_to_memory(filtered, "complete")
     return spark.table(view)
 
 
@@ -551,7 +405,7 @@ def a08_stream_tombstone_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, scratch_dir("kss-store-") + "/store"
     )
     q = (
-        changelog.writeStream.foreachBatch(store.foreach_batch())
+        changelog.writeStream.foreachBatch(store.merge_batch)
         .outputMode("update")
         .option("checkpointLocation", scratch_dir("kss-ckpt-"))
         .trigger(availableNow=True)
@@ -560,4 +414,4 @@ def a08_stream_tombstone_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     result = store.read()
     assert result is not None
-    return result.drop("__batch")
+    return result

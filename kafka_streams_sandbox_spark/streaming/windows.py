@@ -18,7 +18,6 @@ changes.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -43,6 +42,7 @@ from kafka_streams_sandbox_spark.session import (
     scratch_dir,
 )
 from kafka_streams_sandbox_spark.sources.replay import events_stream
+from kafka_streams_sandbox_spark.streaming.ktable import run_to_memory
 
 
 def assert_stream_batch_duality(
@@ -167,21 +167,6 @@ def compact_committed_state(
         "files_after": files_after,
         "rows": int(rows),
     }
-
-
-def run_to_memory(df: DataFrame, mode: str) -> str:
-    """Run a streaming DF availableNow into a memory-sink view."""
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", scratch_dir("kss-ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return name
 
 
 def tumbling_window_stream(
@@ -2667,9 +2652,10 @@ def a36_span_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         accepted raw corpus and the compactor re-runs b97's
         ``span_removal_rewrite`` over the WHOLE raw union, MERGEing
         the rewritten rows into the A8 versioned store
-        (ParquetKTableStore: hash-bucketed versions, atomic _CURRENT
-        flip, previous version pinned one full merge cycle) — rewrite
-        in place at rest, readers never blocked mid-compaction.
+        (ParquetKTableStore: one flat version per merge, atomic
+        _CURRENT flip, previous version pinned one full merge cycle)
+        — rewrite in place at rest, readers never blocked
+        mid-compaction.
 
     Two properties certified IN-QUERY every round (the duality
     discipline, applied at rest):
@@ -2689,11 +2675,11 @@ def a36_span_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pins the exact rewritten store content.
 
     Scale: each round is ONE b97 over the corpus (linear posting-list
-    work, the b97 plan verbatim) + a bucketed store merge bounded by
-    touched buckets. The corpus-global election IS the semantics, so
-    the full-union recompute is the honest per-round cost; a
-    production cadence amortizes it by running the compactor at the
-    same period the corpus meaningfully grows."""
+    work, the b97 plan verbatim) + a whole-store merge rewrite. The
+    corpus-global election IS the semantics, so the full-union
+    recompute is the honest per-round cost; a production cadence
+    amortizes it by running the compactor at the same period the
+    corpus meaningfully grows."""
     from kafka_streams_sandbox_spark.catalog import documents_wide
 
     return span_compaction_rounds(
@@ -2765,7 +2751,7 @@ def span_compaction_rounds(
         # invariance: the store AFTER the flip == batch b97 over the
         # same raw union, bit-identical multisets (full) or the
         # deterministic 1/16 doc slice (sampled — the verify knob)
-        cur = store.read().drop("__batch").select(*payload)
+        cur = store.read().select(*payload)
         if verify == "sampled":
             samp = F.col("doc_id") % 16 == 0
             cur_c, rw_c = cur.filter(samp), rewritten.filter(samp)

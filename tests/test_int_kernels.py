@@ -216,3 +216,61 @@ def test_winnow_kernel_equals_sql_chain(spark, kernel_docs_dir, sf_dir):
         }
         assert len(expected) > 10
         assert got == expected
+
+
+# An empty per-doc segment must fail the task, not mis-reduce:
+# np.add.reduceat / np.minimum.reduceat return the NEXT doc's value on
+# a zero-length segment, so without the check doc 1 below would
+# silently inherit doc 2's result.
+def _assert_empty_segment_fails(spark, rows, schema, kernel, out_schema):
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    with pytest.raises(Exception, match="ValueError.*empty"):
+        df.mapInPandas(kernel, out_schema).collect()
+
+
+def test_simhash_kernel_rejects_empty_segment(spark):
+    from kafka_streams_sandbox_spark.functions.intkernels import (
+        simhash_from_token_hashes,
+    )
+
+    _assert_empty_segment_fails(
+        spark,
+        [(0, [11, 12]), (1, []), (2, [13])],
+        "doc_id long, th array<bigint>",
+        simhash_from_token_hashes,
+        "doc_id long, simhash long",
+    )
+
+
+def test_minhash_kernel_rejects_empty_segment(spark):
+    from kafka_streams_sandbox_spark.functions.intkernels import (
+        minhash_sig_kernel,
+    )
+    from kafka_streams_sandbox_spark.operators.dedup import _MINHASH_K, _PRIME
+
+    _assert_empty_segment_fails(
+        spark,
+        [(0, [11, 12]), (1, []), (2, [13])],
+        "doc_id long, hs array<bigint>",
+        minhash_sig_kernel(_MINHASH_K, _PRIME),
+        "doc_id long, sig array<bigint>",
+    )
+
+
+def test_winnow_kernel_rejects_tokenless_doc(spark):
+    from kafka_streams_sandbox_spark.functions.intkernels import (
+        winnow_prints_kernel,
+    )
+    from kafka_streams_sandbox_spark.operators.dedup import (
+        _WIN_B2,
+        _WIN_N,
+        _WIN_W,
+    )
+
+    _assert_empty_segment_fails(
+        spark,
+        [(0, ["one", "two"]), (1, []), (2, ["three"])],
+        "doc_id long, toks array<string>",
+        winnow_prints_kernel(_WIN_B2, _WIN_N, _WIN_W),
+        "doc_id long, pr long",
+    )

@@ -206,3 +206,61 @@ def test_scan_width_remote_uri_sentinel(tmp_path):
     # file:// is local-ish but os.path won't see it either way the
     # key property is: no forced shuffle
     assert _scan_width("file:///nonexistent/x.parquet") >= 1
+
+
+def _rowcount_dir(tmp_path):
+    """A two-part parquet directory of 100 + 50 rows, plus Spark's
+    hidden bookkeeping files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "stage"
+    d.mkdir()
+    for i, n in enumerate((100, 50)):
+        pq.write_table(
+            pa.table({"x": pa.array(range(n), pa.int64())}),
+            str(d / f"part-{i}.parquet"),
+        )
+    (d / "_SUCCESS").touch()
+    (d / ".part-0.parquet.crc").write_bytes(b"crc")
+    return d
+
+
+def test_parquet_path_rowcount_footers_and_zero_byte_part(tmp_path):
+    """Footer row counts sum over the parts; a zero-byte part (an
+    interrupted write Spark tolerates) counts as 0 rows."""
+    from kafka_streams_sandbox_spark.catalog import parquet_path_rowcount
+
+    d = _rowcount_dir(tmp_path)
+    assert parquet_path_rowcount(str(d)) == 150
+    (d / "part-2.parquet").touch()
+    assert parquet_path_rowcount(str(d)) == 150
+
+
+def test_parquet_path_rowcount_unknown_on_unreadable_footer(tmp_path):
+    """A NON-empty part whose footer cannot be read is not 0 rows:
+    the helper answers None so the caller falls back to count()."""
+    from kafka_streams_sandbox_spark.catalog import parquet_path_rowcount
+
+    d = _rowcount_dir(tmp_path)
+    (d / "part-2.parquet").write_bytes(b"not parquet at all")
+    assert parquet_path_rowcount(str(d)) is None
+
+
+def test_parquet_path_rowcount_unknown_on_subdirectory(tmp_path):
+    """A partitioned or nested layout holds rows the flat listing
+    would miss: any non-hidden subdirectory makes the answer None."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_streams_sandbox_spark.catalog import parquet_path_rowcount
+
+    d = _rowcount_dir(tmp_path)
+    (d / "_temporary").mkdir()  # hidden: Spark skips it too
+    assert parquet_path_rowcount(str(d)) == 150
+    (d / "p=1").mkdir()
+    pq.write_table(
+        pa.table({"x": pa.array(range(7), pa.int64())}),
+        str(d / "p=1" / "part-0.parquet"),
+    )
+    assert parquet_path_rowcount(str(d)) is None

@@ -68,15 +68,19 @@ def test_store_merge_upsert_and_delete(spark, tmp_path):
     )
     store.merge_batch(b2, 1)
     assert {r.k: r.v for r in store.read().collect()} == {"a": 9, "c": 3}
+    # one flat version: the batch's own columns, no subdirectories
+    assert store.read().columns == ["k", "v", "is_delete"]
+    vdir = tmp_path / "store" / store.current_version()
+    assert not [p for p in vdir.iterdir() if p.is_dir()]
 
 
 def test_store_restart_upserts_win_over_persisted_rows(spark, tmp_path):
     """A new app run's micro-batch ids restart at 0 (StreamsApp builds
     a fresh checkpoint per start), so the store's upsert order must
-    NOT be the raw Spark batch id: a persisted row from run 1 batch 2
+    NOT be the Spark batch id: a persisted row from run 1 batch 2
     would outrank run 2 batch 0 and the restart's writes would be
-    silently discarded. The store re-bases its ordering stamp from the
-    persisted version watermark on first merge."""
+    silently discarded. Every merge ranks the incoming batch above
+    the persisted rows, whatever its id."""
     root = str(tmp_path / "store")
     run1 = ParquetKTableStore(spark, root, key="k")
     run1.merge_batch(_store_batch(spark, [("a", 1, False)]), 0)
@@ -240,14 +244,14 @@ def test_multi_batch_store_merge_equals_batch(spark, sf_dir, tmp_path):
     tbl = latest_by_key_stream(stream).withColumn("is_delete", F.lit(False))
     store = ParquetKTableStore(spark, str(tmp_path / "store"), key="user_id")
     q = (
-        tbl.writeStream.foreachBatch(store.foreach_batch())
+        tbl.writeStream.foreachBatch(store.merge_batch)
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    got = store.read().drop("__batch")
+    got = store.read()
     expected = (
         normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     )
@@ -405,79 +409,55 @@ def _store_batch(spark, rows):
     return spark.createDataFrame(rows, "k string, v int, is_delete boolean")
 
 
-def _bucket_of(spark, key, n_buckets):
-    return (
-        spark.range(1)
-        .select(
-            F.pmod(F.xxhash64(F.lit(key)), F.lit(n_buckets))
-            .cast("int")
-            .alias("b")
-        )
-        .collect()[0]
-        .b
-    )
+def test_store_merge_reads_batch_once(spark, tmp_path):
+    """foreachBatch frames re-run their upstream plan (the stateful
+    aggregation) on every action, so a merge must read its batch
+    exactly once: a UDF filter counting rows through an accumulator
+    sees each of the 3 batch rows one time, on a merge over a
+    non-empty store. (A filter, not a projected column: any second
+    action, even a count() that prunes every column, must run it.)"""
+    from pyspark.sql.functions import udf
 
+    store = ParquetKTableStore(spark, str(tmp_path / "store"), key="k")
+    store.merge_batch(_store_batch(spark, [("a", 1, False), ("z", 0, False)]), 0)
+    seen = spark.sparkContext.accumulator(0)
 
-def test_store_incremental_bucket_rewrite(spark, tmp_path):
-    """A one-key micro-batch rewrites ONLY that key's bucket: every
-    other bucket is carried as hardlinks to the previous version's
-    files (visible per-bucket writes, per-batch cost bounded by
-    changed buckets)."""
-    import os
+    @udf("boolean")
+    def counted(k):
+        seen.add(1)
+        return True
 
-    root = str(tmp_path / "store")
-    store = ParquetKTableStore(spark, root, key="k", n_buckets=4)
-    store.merge_batch(
-        _store_batch(spark, [(f"k{i}", i, False) for i in range(20)]), 0
-    )
-    v1 = store.current_version()
-    v1_inodes = {}
-    for bucket in os.listdir(os.path.join(root, v1)):
-        if bucket.startswith("__bucket="):
-            d = os.path.join(root, v1, bucket)
-            v1_inodes[bucket] = {
-                os.stat(os.path.join(d, f)).st_ino
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            }
-    assert len(v1_inodes) == 4  # 20 keys cover all 4 buckets
-
-    store.merge_batch(_store_batch(spark, [("k3", 99, False)]), 1)
-    v2 = store.current_version()
-    assert v2 != v1
-    changed = f"__bucket={_bucket_of(spark, 'k3', 4)}"
-    for bucket, old_inodes in v1_inodes.items():
-        d = os.path.join(root, v2, bucket)
-        new_inodes = {
-            os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d)
-            if not f.startswith(("_", "."))
-        }
-        if bucket == changed:
-            assert new_inodes.isdisjoint(old_inodes), "changed bucket rewritten"
-        else:
-            assert new_inodes == old_inodes, "unchanged bucket hardlinked"
-    got = {r.k: r.v for r in store.read().collect()}
-    assert got["k3"] == 99 and len(got) == 20
-
-    # previous version is pinned for in-flight readers; two merges later
-    # it is reclaimed.
-    assert os.path.isdir(os.path.join(root, v1))
-    store.merge_batch(_store_batch(spark, [("k5", 55, False)]), 2)
-    assert not os.path.isdir(os.path.join(root, v1))
+    batch = _store_batch(
+        spark, [("a", 7, False), ("b", 2, False), ("z", 0, True)]
+    ).filter(counted("k"))
+    store.merge_batch(batch, 1)
+    assert seen.value == 3
+    assert {r.k: r.v for r in store.read().collect()} == {"a": 7, "b": 2}
 
 
 def test_store_reader_survives_concurrent_merge(spark, tmp_path):
     """ADVICE fix: the _CURRENT pointer flip means there is no window
     where the store doesn't exist, and a DataFrame handed out before a
     merge stays readable after it (old version retained one cycle)."""
-    store = ParquetKTableStore(spark, str(tmp_path / "store"), key="k")
+    import os
+
+    root = str(tmp_path / "store")
+    store = ParquetKTableStore(spark, root, key="k")
     store.merge_batch(_store_batch(spark, [("a", 1, False), ("b", 2, False)]), 0)
+    v1 = store.current_version()
     snapshot = store.read()
     store.merge_batch(_store_batch(spark, [("a", 9, False)]), 1)
+    assert store.current_version() != v1
     # pre-merge snapshot still collectable (its files weren't renamed away)
     assert {r.k: r.v for r in snapshot.collect()} == {"a": 1, "b": 2}
     assert {r.k: r.v for r in store.read().collect()} == {"a": 9, "b": 2}
+
+    # previous version is pinned for in-flight readers; two merges later
+    # it is reclaimed.
+    assert os.path.isdir(os.path.join(root, v1))
+    store.merge_batch(_store_batch(spark, [("b", 5, False)]), 2)
+    assert not os.path.isdir(os.path.join(root, v1))
+    assert {r.k: r.v for r in store.read().collect()} == {"a": 9, "b": 5}
 
 
 def test_store_null_is_delete_is_explicit_tombstone(spark, tmp_path):
@@ -682,11 +662,8 @@ def test_store_recovers_from_writer_killed_mid_merge(spark, tmp_path):
     v0 = store.current_version()
 
     # simulate the dead writer: a fully-written version dir, no flip
-    orphan = _store_batch(spark, [("a", 99, False)]).withColumn(
-        "__batch", F.lit(1)
-    ).withColumn("__bucket", F.lit(0))
     orphan_dir = os.path.join(root, "v1-deadbeef")
-    orphan.write.partitionBy("__bucket").parquet(orphan_dir)
+    _store_batch(spark, [("a", 99, False)]).write.parquet(orphan_dir)
 
     # reader is unaffected: still the flipped version's state
     assert store.current_version() == v0
@@ -872,14 +849,14 @@ def test_processing_time_cadence_advances_store_versions(spark, tmp_path):
     store = ParquetKTableStore(spark, str(tmp_path / "store"), key="key")
     fstore = ParquetKTableStore(spark, str(tmp_path / "fstore"), key="key")
     q_tbl = (
-        tbl.writeStream.foreachBatch(store.foreach_batch())
+        tbl.writeStream.foreachBatch(store.merge_batch)
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt-tbl"))
         .trigger(processingTime="500 milliseconds")
         .start()
     )
     q_filt = (
-        filtered.writeStream.foreachBatch(fstore.foreach_batch())
+        filtered.writeStream.foreachBatch(fstore.merge_batch)
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt-filt"))
         .trigger(processingTime="500 milliseconds")
@@ -889,7 +866,7 @@ def test_processing_time_cadence_advances_store_versions(spark, tmp_path):
     def store_dict():
         return {
             r["key"]: r["value"]
-            for r in store.read().drop("__batch").collect()
+            for r in store.read().collect()
         }
 
     def wait_advance(prev, timeout=60.0):
@@ -930,14 +907,14 @@ def test_processing_time_cadence_advances_store_versions(spark, tmp_path):
             if df is not None:
                 got = {
                     r["key"]: r["value"]
-                    for r in df.drop("__batch").collect()
+                    for r in df.collect()
                 }
                 if got == {"c": "c"}:
                     return got
             _time.sleep(0.2)
         return {
             r["key"]: r["value"]
-            for r in fstore.read().drop("__batch").collect()
+            for r in fstore.read().collect()
         }
 
     assert fstore_dict() == {"c": "c"}
@@ -987,7 +964,7 @@ def test_concurrent_reader_at_cadence_sees_only_consistent_snapshots(
     )
     store = ParquetKTableStore(spark, str(tmp_path / "store"), key="key")
     q = (
-        tbl.writeStream.foreachBatch(store.foreach_batch())
+        tbl.writeStream.foreachBatch(store.merge_batch)
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="500 milliseconds")
