@@ -686,11 +686,12 @@ B54_ORACLE = """
 @query("b54_merge_upsert", oracle=B54_ORACLE)
 def b54_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE WHEN MATCHED THEN UPDATE, emulated on plain parquet:
-    outer-join target to the change set and coalesce columns — the
-    batch pattern ParquetKTableStore's streaming upsert also pays in
-    full: a table format's MERGE INTO does the same join under the
-    hood, and on plain files the price is a full rewrite (the store
-    writes one whole new version per micro-batch). Change set is the
+    outer-join target to the change set and coalesce columns — a
+    table format's MERGE INTO does the same join under the hood, and
+    on plain files the price is a full rewrite. ParquetKTableStore's
+    streaming upsert defers that price: it appends each micro-batch
+    as a delta and pays this fold only at compaction, once four or
+    more deltas weigh as much as the base. Change set is the
     latest event per key (window rank), exactly the CDC-compaction
     step a streaming changelog needs before applying. The change set
     is |users|-sized — unbounded at scale — so it carries NO mandatory

@@ -58,6 +58,10 @@ _OPERATOR_MODULES = (
 # Maintain this list every round: add each query you touch; prune once
 # its fresh driver row lands.
 REVERIFY_FIRST: tuple[str, ...] = (
+    # --- changed store layout (delta log + size-triggered compaction) ---
+    "a08_stream_tombstone_store",
+    "a09_app_interactive_query",
+    "a36_span_compaction",
     # --- round-13 ordering (VERDICT r12 #3): new + changed queries
     # first (the r2 stale-row rule: every touched query re-rows),
     # then the 37 r9-aged rows — after this round the latest-row

@@ -199,8 +199,8 @@ class StreamsApp:
         ``open_store`` reads. The in-process ``store()`` is the
         reference's in-JVM ReadOnlyKeyValueStore; on a cluster the
         root lives on shared storage and every reader resolves the
-        atomic ``_CURRENT`` pointer to the live flat version
-        independently, no driver-local state involved."""
+        atomic ``_CURRENT`` pointer to the live version (base plus
+        deltas) independently, no driver-local state involved."""
         if name not in self._stores:
             raise KeyError(f"unknown store {name!r}; have {list(self._stores)}")
         return self._stores[name].path
@@ -239,11 +239,16 @@ def open_store(spark: SparkSession, path: str, key: str = "key") -> DataFrame:
     inside the running JVM; at scale the store root sits on shared
     storage and readers must be decoupled from the writer. Safety
     comes from the store layout, not reader/writer coordination: each
-    merge writes one new flat version, ``_CURRENT`` flips to it via
+    merge writes one new version (a delta plus hard links to the live
+    files, or a compacted base), ``_CURRENT`` flips to it via
     os.replace (atomic), and the previous version's files are pinned
     until the NEXT merge completes, so a DataFrame opened just before
     a flip stays readable through one full merge cycle
-    (concurrent-reader-at-cadence test: tests/test_streaming.py)."""
+    (concurrent-reader-at-cadence test: tests/test_streaming.py).
+
+    ``key`` must be the store's key column: while the live version
+    holds deltas, the read folds them into the base by latest row per
+    ``key``, and a filter on it reaches the parquet scan."""
     df = ParquetKTableStore(spark, path, key=key).read()
     if df is None:
         raise RuntimeError(f"store at {path!r} not materialized yet")

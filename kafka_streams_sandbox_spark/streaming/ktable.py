@@ -28,11 +28,12 @@ Semantics carried over exactly:
 
 Scale notes: state is hash-partitioned by key across executors
 (shuffle on groupBy key) — the 3-partition topic of the reference
-generalizes to spark.sql.shuffle.partitions. The parquet store keeps
-one flat version directory per merge: each micro-batch rewrites the
-whole store, readers follow an atomically-flipped _CURRENT pointer,
-and the previous version stays readable for one more merge (see
-ParquetKTableStore).
+generalizes to spark.sql.shuffle.partitions. The parquet store is a
+small LSM: each micro-batch writes only its own rows as a delta and
+hard-links the rest, a compaction folds the deltas back into the base
+once at least four of them weigh as much as it, readers follow an
+atomically-flipped _CURRENT pointer, and the previous version stays
+readable for one more merge (see ParquetKTableStore).
 """
 
 from __future__ import annotations
@@ -44,6 +45,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from kafka_streams_sandbox_spark.registry import query
 from kafka_streams_sandbox_spark.sources.replay import (
@@ -54,6 +56,16 @@ from kafka_streams_sandbox_spark.sources.replay import (
 from kafka_streams_sandbox_spark.session import scratch_dir
 
 EVENT_COLS = ("event_id", "ts", "event_type", "value")
+
+# ParquetKTableStore layer column: 0 is the base, 1..n the deltas
+_SEQ = "__seq"
+_SEQ_DIR = f"{_SEQ}="
+# A fold costs two jobs more than a delta write whatever the store's
+# size. Over a base no bigger than a couple of batches the deltas
+# outweigh it after every second merge, so a fold waits for this many
+# deltas (RocksDB's level-0 compaction trigger), which also keeps
+# stores of different sizes folding on the same merges.
+_MIN_DELTAS = 4
 
 
 def latest_by_key_stream(
@@ -182,25 +194,37 @@ class ParquetKTableStore:
     (key, payload..., is_delete) into a parquet store: upsert
     latest-per-key, then delete tombstoned keys — the Delta
     ``MERGE WHEN MATCHED AND src.is_delete THEN DELETE`` pattern on
-    plain parquet.
+    plain parquet, laid out as a small LSM:
 
-    Layout — one flat version directory per merge:
+        <root>/_CURRENT                         -> names the live version
+        <root>/v<batch>-<nonce>/__seq=0/part-*  base: one row per key,
+                                                no tombstones
+        <root>/v<batch>-<nonce>/__seq=<n>/part-* delta n: a batch as it
+                                                arrived, tombstones kept
 
-        <root>/_CURRENT                 -> names the live version
-        <root>/v<batch>-<nonce>/part-*.parquet
-
-    * Whole-store rewrite: each merge unions the micro-batch with the
-      live version, keeps the latest row per key (batch rows outrank
-      stored rows), drops tombstones and writes the result as a new
-      version. Per-batch cost grows with store size; a high-cardinality
-      changelog touches every key range each batch anyway.
+    * Per-batch writes sized to the batch: a merge writes the batch
+      frame unchanged as delta ``max(__seq) + 1`` of a new version and
+      hard-links the live version's files into it, so the new version
+      holds every live ``part-*`` file.
+    * Size-triggered compaction: when at least ``_MIN_DELTAS`` deltas
+      are live and their bytes reach the base's, the merge writes the
+      batch's delta as usual and then folds that staged version (base
+      ∪ deltas ∪ batch) from parquet into a new ``__seq=0/``, dropping
+      the tombstones. A live version therefore holds at most
+      ``_MIN_DELTAS`` deltas, or more only while they weigh less than
+      the base plus one batch.
+    * Reads fold the same way (``_fold``: latest row per key, the
+      highest ``__seq`` winning, tombstones dropped) whenever deltas
+      exist; a base-only version is read as is.
     * Atomic + reader-safe: readers resolve ``_CURRENT`` (flipped via
       os.replace, atomic on POSIX) — there is no instant where the
       store path doesn't exist. The previous version's files are kept
       until the NEXT merge completes, so a DataFrame handed out just
-      before a flip stays readable through one full merge cycle.
-    * Empty store: an all-tombstone merge writes a schema-only part
-      file, so the version still reads back as an empty frame.
+      before a flip stays readable through one full merge cycle. A
+      writer that dies before the flip leaves an orphan version that
+      no reader resolves and the next merge reclaims.
+    * Empty store: an all-tombstone compaction writes a schema-only
+      part file, so the version still reads back as an empty frame.
     """
 
     def __init__(self, spark: SparkSession, path: str, key: str = "user_id"):
@@ -225,44 +249,101 @@ class ParquetKTableStore:
             f.write(version)
         os.replace(tmp, self._current_file())  # atomic pointer flip
 
+    def _layers(self, version: str) -> dict[int, int]:
+        """``{seq: part-file bytes}`` of a version's ``__seq=`` dirs."""
+        vdir = os.path.join(self.path, version)
+        layers = {}
+        for name in os.listdir(vdir):
+            if name.startswith(_SEQ_DIR):
+                ldir = os.path.join(vdir, name)
+                layers[int(name[len(_SEQ_DIR):])] = sum(
+                    os.path.getsize(os.path.join(ldir, f))
+                    for f in os.listdir(ldir)
+                    if f.startswith("part-")
+                )
+        return layers
+
     # -- reads -------------------------------------------------------------
+    def _fold(self, layers: DataFrame) -> DataFrame:
+        """Latest row per key over ``__seq``-tagged layers (the highest
+        ``__seq`` wins), tombstones dropped. A NULL is_delete is an
+        explicit tombstone (a NULL-predicate row from ktable_filter
+        means "failed the filter"), never a silent keep — coalesce
+        makes that visible in the plan."""
+        from kafka_streams_sandbox_spark.operators.semantic import latest_per_key
+
+        latest = latest_per_key(layers, key=self.key, ts=_SEQ, tiebreak=_SEQ)
+        return latest.filter(
+            ~F.coalesce(F.col("is_delete"), F.lit(True))
+        ).drop(_SEQ)
+
+    def _read_version(
+        self, version: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """A version (or one of its layers); a known ``schema`` spares
+        Spark the footer-inference job."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.path, version))
+
     def read(self) -> DataFrame | None:
         version = self.current_version()
         if version is None:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, version))
+        if list(self._layers(version)) == [0]:
+            return self._read_version(os.path.join(version, f"{_SEQ_DIR}0"))
+        return self._fold(self._read_version(version))
 
     # -- merge -------------------------------------------------------------
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """Fold one micro-batch into a new version and flip to it.
+        """Write one micro-batch into a new version and flip to it.
 
-        The batch frame is read exactly once (by the write): a second
-        action would re-run the upstream stateful aggregation. Batch
-        rows always outrank stored rows, so a restarted app (whose
-        micro-batch ids restart at 0) needs no re-basing."""
-        from kafka_streams_sandbox_spark.operators.semantic import latest_per_key
-
+        The batch frame is read exactly once, by the delta write: a
+        second action would re-run the upstream stateful aggregation.
+        The batch takes the next ``__seq`` of the live version, so it
+        outranks every stored row and a restarted app (whose
+        micro-batch ids restart at 0) needs no re-basing. A compaction
+        folds that staged version from parquet into a new base, so
+        every compaction runs the same plan as a folded read."""
         prev_version = self.current_version()
-        combined = batch.withColumn("__src", F.lit(1))
+        layers = self._layers(prev_version) if prev_version else {}
+        seq = max(layers, default=0) + 1
+        version = self._new_version(batch_id)
+        vdir = os.path.join(self.path, version)
+        batch.write.parquet(os.path.join(vdir, f"{_SEQ_DIR}{seq}"))
         if prev_version is not None:
-            stored = self.spark.read.parquet(os.path.join(self.path, prev_version))
-            combined = stored.withColumn("__src", F.lit(0)).unionByName(combined)
-        merged = latest_per_key(combined, key=self.key, ts="__src", tiebreak="__src")
-        # NULL is_delete is an explicit tombstone (a NULL-predicate row
-        # from ktable_filter means "failed the filter"), never a
-        # silent keep — coalesce makes that visible in the plan.
-        survivors = merged.filter(
-            ~F.coalesce(F.col("is_delete"), F.lit(True))
-        ).drop("__src")
-        version = f"v{batch_id}-{uuid.uuid4().hex[:8]}"
-        survivors.write.parquet(os.path.join(self.path, version))
+            self._link_layers(os.path.join(self.path, prev_version), layers, vdir)
+        deltas = [b for s, b in layers.items() if s]
+        if not layers or (
+            len(deltas) >= _MIN_DELTAS and sum(deltas) >= layers[0]
+        ):
+            # compaction (also the first merge): one new base
+            staged, version = version, self._new_version(batch_id)
+            schema = StructType([*batch.schema, StructField(_SEQ, IntegerType())])
+            self._fold(self._read_version(staged, schema)).write.parquet(
+                os.path.join(self.path, version, f"{_SEQ_DIR}0")
+            )
+            shutil.rmtree(vdir)
         self._flip_current(version)
         self._cleanup(keep={version, prev_version})
+
+    @staticmethod
+    def _new_version(batch_id: int) -> str:
+        return f"v{batch_id}-{uuid.uuid4().hex[:8]}"
+
+    @staticmethod
+    def _link_layers(src: str, layers: dict[int, int], vdir: str) -> None:
+        """Hard-link every file of the version at ``src`` into ``vdir``."""
+        for seq in layers:
+            name = f"{_SEQ_DIR}{seq}"
+            os.makedirs(os.path.join(vdir, name))
+            for f in os.listdir(os.path.join(src, name)):
+                os.link(os.path.join(src, name, f), os.path.join(vdir, name, f))
 
     def _cleanup(self, keep: set[str | None]) -> None:
         """Drop versions older than (current, previous) — previous is
         pinned so readers holding a pre-flip DataFrame stay valid for
-        one more merge cycle."""
+        one more merge cycle. Links keep a reclaimed version's files
+        alive for the versions that still name them."""
         for name in os.listdir(self.path):
             full = os.path.join(self.path, name)
             if name.startswith("v") and os.path.isdir(full) and name not in keep:

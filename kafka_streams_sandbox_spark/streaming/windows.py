@@ -2652,8 +2652,9 @@ def a36_span_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         accepted raw corpus and the compactor re-runs b97's
         ``span_removal_rewrite`` over the WHOLE raw union, MERGEing
         the rewritten rows into the A8 versioned store
-        (ParquetKTableStore: one flat version per merge, atomic
-        _CURRENT flip, previous version pinned one full merge cycle)
+        (ParquetKTableStore: a delta or a compacted base per merge,
+        atomic _CURRENT flip, previous version pinned one full merge
+        cycle)
         — rewrite in place at rest, readers never blocked
         mid-compaction.
 
@@ -2675,11 +2676,12 @@ def a36_span_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     and pins the exact rewritten store content.
 
     Scale: each round is ONE b97 over the corpus (linear posting-list
-    work, the b97 plan verbatim) + a whole-store merge rewrite. The
-    corpus-global election IS the semantics, so the full-union
-    recompute is the honest per-round cost; a production cadence
-    amortizes it by running the compactor at the same period the
-    corpus meaningfully grows."""
+    work, the b97 plan verbatim) + one store merge, written as a
+    delta or, once four or more deltas weigh as much as the base, a compaction
+    folding them back in. The corpus-global election IS the
+    semantics, so the full-union recompute is the honest per-round
+    cost; a production cadence amortizes it by running the compactor
+    at the same period the corpus meaningfully grows."""
     from kafka_streams_sandbox_spark.catalog import documents_wide
 
     return span_compaction_rounds(

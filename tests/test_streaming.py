@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_sandbox_spark.catalog import normalize_event_ts
 from kafka_streams_sandbox_spark.registry import all_queries
-from kafka_streams_sandbox_spark.streaming.ktable import ParquetKTableStore
+from kafka_streams_sandbox_spark.streaming.ktable import _MIN_DELTAS, ParquetKTableStore
 
 
 def _sorted_rows(df, cols):
@@ -68,10 +68,11 @@ def test_store_merge_upsert_and_delete(spark, tmp_path):
     )
     store.merge_batch(b2, 1)
     assert {r.k: r.v for r in store.read().collect()} == {"a": 9, "c": 3}
-    # one flat version: the batch's own columns, no subdirectories
+    # the batch's own columns; the first merge wrote the base, the
+    # second a delta beside it
     assert store.read().columns == ["k", "v", "is_delete"]
     vdir = tmp_path / "store" / store.current_version()
-    assert not [p for p in vdir.iterdir() if p.is_dir()]
+    assert sorted(p.name for p in vdir.iterdir()) == ["__seq=0", "__seq=1"]
 
 
 def test_store_restart_upserts_win_over_persisted_rows(spark, tmp_path):
@@ -83,16 +84,22 @@ def test_store_restart_upserts_win_over_persisted_rows(spark, tmp_path):
     the persisted rows, whatever its id."""
     root = str(tmp_path / "store")
     run1 = ParquetKTableStore(spark, root, key="k")
-    run1.merge_batch(_store_batch(spark, [("a", 1, False)]), 0)
+    base = [(f"k{i:04d}", i, False) for i in range(2000)]
+    run1.merge_batch(_store_batch(spark, base + [("a", 1, False)]), 0)
     run1.merge_batch(_store_batch(spark, [("a", 2, False)]), 1)
-    assert {r.k: r.v for r in run1.read().collect()} == {"a": 2}
-    # simulate restart: fresh store object over the same path, fresh
-    # batch ids starting at 0
+    assert _store_dict(run1)["a"] == 2
+    assert _layer_names(run1) == ["__seq=0", "__seq=1"]
+    # simulate restart over a store holding a delta: fresh store
+    # object over the same path, fresh batch ids starting at 0; the
+    # new delta's __seq continues from the directory
     run2 = ParquetKTableStore(spark, root, key="k")
     run2.merge_batch(_store_batch(spark, [("a", 7, False)]), 0)
-    assert {r.k: r.v for r in run2.read().collect()} == {"a": 7}
+    assert _layer_names(run2) == ["__seq=0", "__seq=1", "__seq=2"]
+    assert _store_dict(run2)["a"] == 7
     run2.merge_batch(_store_batch(spark, [("a", 0, True)]), 1)
-    assert run2.read().count() == 0  # restart tombstone also wins
+    assert _layer_names(run2)[-1] == "__seq=3"
+    got = _store_dict(run2)
+    assert "a" not in got and len(got) == 2000  # restart tombstone also wins
 
 
 def test_running_stats_tiebreak_matches_batch_latest(spark, tmp_path):
@@ -302,6 +309,54 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert got.agg(F.countDistinct("v")).collect()[0][0] == 150
 
 
+def test_latest_by_key_state_reloads_from_changelog(spark, tmp_path):
+    """Stateful restart under RocksDB changelog checkpointing (on in
+    session.RUNTIME_CONFS): two availableNow runs of
+    latest_by_key_stream on one checkpoint. The second run brings an
+    OLDER record for a first-run key; the first run's row must
+    survive, which holds only if the restarted query reloaded the
+    key's state, and the checkpoint holds changelog files."""
+    import os
+
+    from kafka_streams_sandbox_spark.streaming.ktable import latest_by_key_stream
+
+    src, ckpt = tmp_path / "src", str(tmp_path / "ckpt")
+    src.mkdir()
+    emitted: dict[str, str] = {}
+
+    def collect(batch, _batch_id):
+        emitted.update({r.key: r.value for r in batch.collect()})
+
+    def run(name, rows):
+        spark.createDataFrame(rows, _RECORDS_SCHEMA).coalesce(1).write.parquet(
+            str(src / name)
+        )
+        stream = spark.readStream.schema(_RECORDS_SCHEMA).parquet(str(src) + "/*")
+        tbl = latest_by_key_stream(
+            stream, key="key", ts="timestamp", tiebreak="event_id",
+            payload=("value", "timestamp", "event_id"),
+        )
+        q = (
+            tbl.writeStream.foreachBatch(collect)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    run("f1", [("a", "new", _ts(5), 1), ("b", "b1", _ts(5), 2)])
+    assert emitted == {"a": "new", "b": "b1"}
+    emitted.clear()
+    run("f2", [("a", "old", _ts(1), 3), ("c", "c1", _ts(1), 4)])
+    assert emitted == {"a": "new", "c": "c1"}
+    changelogs = [
+        f for _d, _s, files in os.walk(os.path.join(ckpt, "state"))
+        for f in files if f.endswith(".changelog")
+    ]
+    assert changelogs
+
+
 # ---------------------------------------------------------------------------
 # Null-value tombstones, peek observer, bucketed store internals
 # ---------------------------------------------------------------------------
@@ -409,30 +464,163 @@ def _store_batch(spark, rows):
     return spark.createDataFrame(rows, "k string, v int, is_delete boolean")
 
 
+def _store_dict(store):
+    return {r.k: r.v for r in store.read().collect()}
+
+
+def _layer_names(store):
+    """The live version's ``__seq=`` directories, base first."""
+    import os
+
+    vdir = os.path.join(store.path, store.current_version())
+    return sorted(os.listdir(vdir), key=lambda n: int(n.split("=")[1]))
+
+
+def _deltas_outweigh_base(store):
+    """True when the next merge compacts: there are at least
+    ``_MIN_DELTAS`` live deltas and their part files weigh at least as
+    much as the base's."""
+    import os
+
+    vdir = os.path.join(store.path, store.current_version())
+    size = {
+        name: sum(
+            os.path.getsize(os.path.join(vdir, name, f))
+            for f in os.listdir(os.path.join(vdir, name))
+            if f.startswith("part-")
+        )
+        for name in os.listdir(vdir)
+    }
+    base = size.pop("__seq=0")
+    return len(size) >= _MIN_DELTAS and sum(size.values()) >= base
+
+
 def test_store_merge_reads_batch_once(spark, tmp_path):
     """foreachBatch frames re-run their upstream plan (the stateful
     aggregation) on every action, so a merge must read its batch
     exactly once: a UDF filter counting rows through an accumulator
     sees each of the 3 batch rows one time, on a merge over a
-    non-empty store. (A filter, not a projected column: any second
-    action, even a count() that prunes every column, must run it.)"""
+    non-empty store, on both the delta and the compaction path. (A
+    filter, not a projected column: any second action, even a count()
+    that prunes every column, must run it.)"""
     from pyspark.sql.functions import udf
 
     store = ParquetKTableStore(spark, str(tmp_path / "store"), key="k")
-    store.merge_batch(_store_batch(spark, [("a", 1, False), ("z", 0, False)]), 0)
-    seen = spark.sparkContext.accumulator(0)
+    base = [(f"k{i:03d}", i, False) for i in range(50)]
+    store.merge_batch(_store_batch(spark, base + [("z", 0, False)]), 0)
 
-    @udf("boolean")
-    def counted(k):
-        seen.add(1)
-        return True
+    def counted_merge(rows, batch_id):
+        seen = spark.sparkContext.accumulator(0)
 
-    batch = _store_batch(
-        spark, [("a", 7, False), ("b", 2, False), ("z", 0, True)]
-    ).filter(counted("k"))
-    store.merge_batch(batch, 1)
-    assert seen.value == 3
-    assert {r.k: r.v for r in store.read().collect()} == {"a": 7, "b": 2}
+        @udf("boolean")
+        def counted(k):
+            seen.add(1)
+            return True
+
+        store.merge_batch(_store_batch(spark, rows).filter(counted("k")), batch_id)
+        return seen.value
+
+    # delta path
+    assert not _deltas_outweigh_base(store)
+    assert counted_merge([("a", 7, False), ("b", 2, False), ("z", 0, True)], 1) == 3
+    assert _layer_names(store) == ["__seq=0", "__seq=1"]
+    # grow the deltas until the next merge compacts, then count again
+    batch_id = 2
+    while not _deltas_outweigh_base(store):
+        store.merge_batch(_store_batch(spark, base[:20]), batch_id)
+        batch_id += 1
+    assert counted_merge([("a", 8, False), ("c", 3, False), ("b", 0, True)], batch_id) == 3
+    assert _layer_names(store) == ["__seq=0"]
+    want = {k: v for k, v, _d in base} | {"a": 8, "c": 3}
+    assert _store_dict(store) == want
+
+
+def test_store_delta_merge_links_live_files(spark, tmp_path):
+    """The usual merge writes only the batch: over a 200-key base the
+    new version holds the base plus one new ``__seq`` directory, and
+    only that directory's files are new (``st_nlink == 1``); every
+    other file is a hard link into the live version."""
+    import os
+
+    store = ParquetKTableStore(spark, str(tmp_path / "store"), key="k")
+    store.merge_batch(
+        _store_batch(spark, [(f"k{i:03d}", i, False) for i in range(200)]), 0
+    )
+    assert _layer_names(store) == ["__seq=0"]
+    store.merge_batch(_store_batch(spark, [("k007", 70, False), ("k008", 0, True)]), 1)
+    vdir = os.path.join(store.path, store.current_version())
+    assert _layer_names(store) == ["__seq=0", "__seq=1"]
+    fresh = {
+        name: [
+            os.stat(os.path.join(vdir, name, f)).st_nlink == 1
+            for f in os.listdir(os.path.join(vdir, name))
+        ]
+        for name in _layer_names(store)
+    }
+    assert fresh["__seq=1"] and all(fresh["__seq=1"])
+    assert fresh["__seq=0"] and not any(fresh["__seq=0"])
+    got = _store_dict(store)
+    assert len(got) == 199 and got["k007"] == 70 and "k008" not in got
+
+
+def test_store_compaction_folds_deltas_into_base(spark, tmp_path):
+    """Once at least ``_MIN_DELTAS`` live deltas weigh as much as the
+    base, the next merge folds base + deltas + batch back into a single
+    ``__seq=0/`` with no tombstone rows; every read, folded or not,
+    equals the model."""
+    import os
+
+    store = ParquetKTableStore(spark, str(tmp_path / "store"), key="k")
+    model = {f"k{i:03d}": i for i in range(100)}
+    store.merge_batch(_store_batch(spark, [(k, v, False) for k, v in model.items()]), 0)
+    batch_id = 1
+    while True:
+        compacting = _deltas_outweigh_base(store)
+        ups = [(f"k{(batch_id * 7 + j) % 120:03d}", batch_id * 1000 + j, False)
+               for j in range(6)]
+        dels = [(f"k{(batch_id * 13) % 100:03d}", 0, True)]
+        store.merge_batch(_store_batch(spark, ups + dels), batch_id)
+        for k, v, _d in ups:
+            model[k] = v
+        for k, _v, _d in dels:
+            model.pop(k, None)
+        assert _store_dict(store) == model
+        if compacting:
+            break
+        assert len(_layer_names(store)) == batch_id + 1
+        batch_id += 1
+    assert batch_id >= 2  # at least one read folded several deltas
+    assert _layer_names(store) == ["__seq=0"]
+    base = spark.read.parquet(
+        os.path.join(store.path, store.current_version(), "__seq=0")
+    )
+    assert base.filter(F.coalesce("is_delete", F.lit(True))).count() == 0
+    assert base.count() == len(model)
+
+
+def test_store_point_lookup_pushes_key_below_exchange(spark, tmp_path):
+    """A point lookup over a multi-delta version still prunes at the
+    scan: the key filter passes through the read fold (it only
+    touches the window's partition key) and lands in the parquet
+    scan's PushedFilters, below the fold's one Exchange."""
+    from kafka_streams_sandbox_spark.plans.inspect import (
+        count_shuffles,
+        plan_string,
+    )
+
+    store = ParquetKTableStore(spark, str(tmp_path / "store"), key="k")
+    store.merge_batch(
+        _store_batch(spark, [(f"k{i:03d}", i, False) for i in range(2000)]), 0
+    )
+    store.merge_batch(_store_batch(spark, [("k001", 10, False)]), 1)
+    store.merge_batch(_store_batch(spark, [("k002", 20, False)]), 2)
+    assert _layer_names(store) == ["__seq=0", "__seq=1", "__seq=2"]
+    lookup = store.read().filter(F.col("k") == "k001").select("v")
+    plan = plan_string(lookup)
+    scan = [b for b in plan.split("\n\n") if "Scan parquet" in b and "PushedFilters" in b]
+    assert len(scan) == 1 and "EqualTo(k,k001)" in scan[0], plan
+    assert count_shuffles(lookup) == 1, plan
+    assert [r.v for r in lookup.collect()] == [10]
 
 
 def test_store_reader_survives_concurrent_merge(spark, tmp_path):
@@ -649,31 +837,81 @@ def test_store_concurrent_reader_under_merge_storm(spark, tmp_path):
 
 
 def test_store_recovers_from_writer_killed_mid_merge(spark, tmp_path):
-    """A writer that died AFTER writing part files but BEFORE the
-    _CURRENT flip must be invisible: readers keep resolving the last
-    flipped version, and the next successful merge supersedes (and
-    eventually reclaims) the orphan directory. This is the crash-case
-    half of the atomic-pointer contract."""
+    """A writer that died at any step BEFORE the _CURRENT flip must be
+    invisible: readers keep resolving the last flipped version, and
+    the next successful merge proceeds from it and reclaims the
+    orphan directory. This is the crash-case half of the
+    atomic-pointer contract, driven through the real merge with the
+    writer killed at each step:
+
+    * a delta written, nothing linked yet;
+    * the links made, ``_CURRENT`` not flipped;
+    * a compaction written, ``_CURRENT`` not flipped."""
     import os
+
+    import pytest
 
     root = str(tmp_path / "store")
     store = ParquetKTableStore(spark, root, key="k")
-    store.merge_batch(_store_batch(spark, [("a", 1, False), ("b", 2, False)]), 0)
-    v0 = store.current_version()
+    model = {f"k{i:04d}": i for i in range(500)}
+    store.merge_batch(_store_batch(spark, [(k, v, False) for k, v in model.items()]), 0)
 
-    # simulate the dead writer: a fully-written version dir, no flip
-    orphan_dir = os.path.join(root, "v1-deadbeef")
-    _store_batch(spark, [("a", 99, False)]).write.parquet(orphan_dir)
+    class WriterKilled(Exception):
+        pass
 
-    # reader is unaffected: still the flipped version's state
-    assert store.current_version() == v0
-    assert {r.k: r.v for r in store.read().collect()} == {"a": 1, "b": 2}
+    def kill(*_args):
+        raise WriterKilled
 
-    # the next real merge proceeds from v0 (not the orphan) and the
-    # cleanup pass reclaims the orphan directory
-    store.merge_batch(_store_batch(spark, [("b", 3, False)]), 2)
-    assert {r.k: r.v for r in store.read().collect()} == {"a": 1, "b": 3}
-    assert not os.path.isdir(orphan_dir), "orphan version not reclaimed"
+    def versions():
+        return {n for n in os.listdir(root) if n.startswith("v")}
+
+    def crash_merge(step, batch_id):
+        live = store.current_version()
+        before = versions()
+        setattr(store, step, kill)
+        try:
+            with pytest.raises(WriterKilled):
+                store.merge_batch(_store_batch(spark, [("k0000", -1, False)]), batch_id)
+        finally:
+            delattr(store, step)
+        (orphan,) = versions() - before
+        assert store.current_version() == live
+        assert _store_dict(store) == model
+        return os.path.join(root, orphan)
+
+    def merge(rows, batch_id):
+        store.merge_batch(_store_batch(spark, rows), batch_id)
+        for k, v, d in rows:
+            if d:
+                model.pop(k, None)
+            else:
+                model[k] = v
+        assert _store_dict(store) == model
+
+    # 1. delta written, nothing linked
+    orphan = crash_merge("_link_layers", 1)
+    assert os.listdir(orphan) == ["__seq=1"]
+    merge([("k0001", 11, False)], 2)
+    assert not os.path.isdir(orphan), "orphan version not reclaimed"
+    assert _layer_names(store) == ["__seq=0", "__seq=1"]
+
+    # 2. links made, _CURRENT not flipped
+    orphan = crash_merge("_flip_current", 3)
+    assert sorted(os.listdir(orphan)) == ["__seq=0", "__seq=1", "__seq=2"]
+    merge([("k0002", 0, True)], 4)
+    assert not os.path.isdir(orphan), "orphan version not reclaimed"
+    assert _layer_names(store) == ["__seq=0", "__seq=1", "__seq=2"]
+
+    # 3. a compaction written, _CURRENT not flipped
+    batch_id = 5
+    while not _deltas_outweigh_base(store):
+        merge([(f"k{batch_id:04d}", batch_id, False)], batch_id)
+        batch_id += 1
+    orphan = crash_merge("_flip_current", batch_id)
+    assert os.listdir(orphan) == ["__seq=0"]
+    merge([("k0003", 33, False)], batch_id + 1)
+    assert not os.path.isdir(orphan), "orphan version not reclaimed"
+    assert _layer_names(store) == ["__seq=0"]
 
 
 def test_multi_batch_stream_static_join_equals_batch(spark, sf_dir, tmp_path):
