@@ -58,13 +58,29 @@ _OPERATOR_MODULES = (
 # Maintain this list every round: add each query you touch; prune once
 # its fresh driver row lands.
 REVERIFY_FIRST: tuple[str, ...] = (
+    # --- shared sink runner (run_batches + committed_state reads) ---
+    "a28_stream_incremental_neardup",
+    "a29_stream_selfseed_neardup",
+    "a30_stream_repetition_gate",
+    "a31_stream_pq_encode",
+    "a32_stream_curation_funnel",
+    "a33_stream_lm_gate",
+    "a34_stream_full_funnel",
+    "a35_stream_paragraph_dedup",
+    "a36_span_compaction",
+    "a37_stream_graded_funnel",
+    "a38_stream_dsir_gate",
+    "a39_stream_bpe_segment",
+    "a40_stream_decontaminate",
+    "a41_stream_quality_classifier",
+    "a42_stream_unigram_segment",
+    "a43_stream_attribute_append",
     # --- changed store layout (delta log + size-triggered compaction) ---
     "a08_stream_tombstone_store",
     "a09_app_interactive_query",
-    "a36_span_compaction",
     # --- round-13 ordering (VERDICT r12 #3): new + changed queries
     # first (the r2 stale-row rule: every touched query re-rows),
-    # then the 37 r9-aged rows — after this round the latest-row
+    # then the r9-aged rows — after this round the latest-row
     # histogram's max age is r10.
     # --- NEW in round 13 (no driver row exists yet) ---
     "b126_attribute_curation_funnel",  # b100 with gates reading the
@@ -72,9 +88,6 @@ REVERIFY_FIRST: tuple[str, ...] = (
                                        # r12 #1)
     "b127_attribute_graded_funnel",    # b113's quality frame from
                                        # attributes
-    "a43_stream_attribute_append",     # ingest-side attribute
-                                       # appender (store stays
-                                       # current)
     # --- changed in round 13 ---
     "b124_quality_attributes",         # +source/fingerprint columns
                                        # (oracle extended to match)
@@ -91,8 +104,7 @@ REVERIFY_FIRST: tuple[str, ...] = (
     "b92_ann_ivf_kmeans",              # guarded_unit_vectors barrier
     "b93_semantic_dedup",              # _vectors barrier
     "b96_lsh_embedding_neardup_scaled",  # _vectors barrier
-    # --- the 37 r9-aged rows (VERDICT r12 #3) ---
-    "a33_stream_lm_gate",
+    # --- the r9-aged rows (VERDICT r12 #3; a33 moved to the top) ---
     "b103_temperature_mixture",
     "b105_winnowing_fingerprints",
     "b106_ivfpq_ann",

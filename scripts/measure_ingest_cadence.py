@@ -180,11 +180,11 @@ def main() -> None:
         .start()
     )
     q.awaitTermination()
-    n_verdicts = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .count()
-    )
+    n_verdicts = committed_state(
+        spark,
+        out_dir,
+        "doc_id bigint, match_id bigint, jaccard double, status string",
+    ).count()
     print(
         json.dumps(
             {

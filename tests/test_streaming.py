@@ -1730,51 +1730,13 @@ def test_span_compaction_cadence_retroactive_flip(spark):
     assert rows[2]["corpus_docs"] == 4
 
 
-def test_span_compaction_sampled_verify_mode(spark):
-    """a36's verify knob (r11, VERDICT r10 #7): the production
-    cadence samples the store==batch invariance assert instead of
-    re-deriving full multisets both ways. Same corpus as the
-    retroactive-flip test (plus doc 16 ≡ 0 mod 16 so the sampled
-    slice is NON-empty — asserted); the report must be identical to
-    full-verify mode row for row (the knob changes only the
-    cross-check's population, never the compaction lineage)."""
-    from kafka_streams_sandbox_spark.streaming.windows import (
-        span_compaction_rounds,
-    )
-
-    S = "s1 s2 s3 s4 s5 s6 s7 s8"
-    rows_src = [
-        (1, "u1 u2 u3 u4 u5 u6 u7 u8 u9"),
-        (16, f"v1 v2 {S} v3 v4"),  # in the doc_id % 16 == 0 sample
-        (17, f"q1 q2 {S} q3 q4"),
-        (8, f"r1 r2 {S} r3 r4"),
-        (19, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
-    ]
-    assert any(d % 16 == 0 for d, _ in rows_src)
-    docs = spark.createDataFrame(rows_src, "doc_id long, text string")
-    full = sorted(
-        map(tuple, span_compaction_rounds(spark, docs).collect())
-    )
-    sampled = sorted(
-        map(
-            tuple,
-            span_compaction_rounds(spark, docs, verify="sampled").collect(),
-        )
-    )
-    assert sampled == full
-    # the sampled assert still bites: doc 16 is a contested-span
-    # holder inside the sample, so the exceptAll cross-check compared
-    # real rewritten content, not an empty slice
-    assert any(r[4] > 0 for r in full)  # changed_docs fired some round
-
-
 def test_ingest_funnel_kill_and_resume(spark):
     """r11: the funnel family's restart contract, DEMONSTRATED (the
     b114 kill-and-resume discipline applied to the flagship ingest
     op). A crash is injected into the nastiest window — batch 0's
     decisions parquet written, state deltas NOT — the availableNow
-    query dies, and _ingest_funnel's bounded restart loop re-runs the
-    same batch_id on the same checkpoint. committed_state must treat
+    query dies, and run_batches' bounded restart re-runs the same
+    batch_id on the same checkpoint. committed_state must treat
     the torn attempt's subpaths as invisible (batch_id < upto reads
     only) and the overwrite subpaths must regenerate identically:
     the resumed run's 16-row graded report must equal a clean run's
@@ -1858,56 +1820,52 @@ def test_stream_graded_funnel_shape(spark):
     assert rows["mixture"][0] < rows["dedup_near"][0]
 
 
-def test_compact_committed_state_folds_and_recovers(spark, tmp_path):
-    """r13 (VERDICT r12 #8): compaction folds seed + committed deltas
-    into one seed with identical content and fewer files; the
-    recovery path finishes an interrupted swap instead of folding
-    emptiness over the good temp."""
-    import glob
-    import os
-    import shutil
+def test_run_batches_restart_budget_and_committed_state_reader(
+    spark, tmp_path
+):
+    """The ingest sinks' shared plumbing. run_batches re-runs a failing
+    micro-batch on the same checkpoint (same batch_id) at most
+    _INGEST_MAX_RESTARTS times, then raises. committed_state is the one
+    reader of batch_id= dirs: upto=None reads every batch, seed only
+    when asked, and an empty root reads as the declared schema."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
 
-    from kafka_streams_sandbox_spark.streaming.windows import (
-        committed_state,
-        compact_committed_state,
-    )
+    from kafka_streams_sandbox_spark.streaming import windows
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1,)], "x long").write.parquet(src)
+    calls: list[int] = []
+
+    def always_fails(bdf, batch_id):
+        calls.append(batch_id)
+        raise RuntimeError("injected sink failure")
+
+    with pytest.raises(StreamingQueryException):
+        windows.run_batches(
+            spark.readStream.schema("x long").parquet(src), always_fails
+        )
+    assert calls == [0] * (windows._INGEST_MAX_RESTARTS + 1)
 
     root = str(tmp_path / "state")
-    schema = "fingerprint string"
-
-    def write(sub, vals):
-        spark.createDataFrame(
-            [(v,) for v in vals], schema
-        ).coalesce(1).write.mode("overwrite").parquet(f"{root}/{sub}")
-
-    write("seed", ["s1", "s2"])
-    for b, vals in enumerate((["a"], ["b1", "b2"], ["c"])):
-        write(f"batch_id={b}", vals)
-
-    def contents():
-        return sorted(
-            r["fingerprint"]
-            for r in committed_state(
-                spark, root, schema, 1 << 30, seed=True
-            ).collect()
+    schema = "v string"
+    for sub, vals in (
+        ("seed", ["s"]),
+        ("batch_id=0", ["a"]),
+        ("batch_id=1", ["b1", "b2"]),
+        ("batch_id=2", ["c"]),
+    ):
+        spark.createDataFrame([(v,) for v in vals], schema).write.parquet(
+            f"{root}/{sub}"
         )
 
-    before = contents()
-    r = compact_committed_state(spark, root, schema, 1 << 30)
-    assert contents() == before
-    assert r["rows"] == 6
-    assert r["files_after"] < r["files_before"]
-    assert not glob.glob(f"{root}/batch_id=*")
+    def read(r, **kw):
+        df = windows.committed_state(spark, r, schema, **kw)
+        return df.columns, sorted(x["v"] for x in df.collect())
 
-    # interrupted-swap recovery: temp written, seed+deltas gone
-    write("batch_id=7", ["late"])
-    state_now = contents()
-    os.rename(f"{root}/seed", f"{root}/compact-tmp-stage")
-    spark.read.parquet(
-        f"{root}/compact-tmp-stage", f"{root}/batch_id=7"
-    ).write.mode("overwrite").parquet(f"{root}/compact-tmp")
-    shutil.rmtree(f"{root}/compact-tmp-stage")
-    shutil.rmtree(f"{root}/batch_id=7")
-    # root now has ONLY compact-tmp (the torn window)
-    compact_committed_state(spark, root, schema, 1 << 30)
-    assert contents() == state_now
+    assert read(root) == (["v"], ["a", "b1", "b2", "c"])
+    assert read(root, seed=True) == (["v"], ["a", "b1", "b2", "c", "s"])
+    assert read(root, upto=2) == (["v"], ["a", "b1", "b2"])
+    empty = windows.committed_state(spark, str(tmp_path / "none"), schema)
+    assert empty.schema.simpleString() == "struct<v:string>"
+    assert empty.count() == 0
